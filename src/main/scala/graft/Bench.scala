@@ -76,16 +76,21 @@ object Bench {
     val scopedCrawlSec = scala.util.Try(
       graft.queries.CrawlQueries.ensureScopedStore(spark, sfDir)).getOrElse(-1.0)
 
+    // a query that throws still gets its timing key; failed_queries
+    // names it, so no consumer takes that time for a run
+    val failed = Seq.newBuilder[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count() } catch { case _: Throwable => failed += name }
       name -> (System.nanoTime() - t0) / 1e9
     }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedQs = failed.result().map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum + crawlSec + scopedCrawlSec
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+        s""""failed_queries":$failedQs,""" +
         s""""crawl_urls_per_sec":$urlsPerSec,"crawl_seconds":$crawlSec,""" +
         s""""crawl_scoped_seconds":$scopedCrawlSec,""" +
         s""""crawl_seconds_runs":[$crawlSec1,$crawlSec2],""" +

@@ -5,7 +5,7 @@ import graft.model._
 import graft.ops.ImageKernels
 import graft.store.SnapshotStore
 import graft.synth.{Synth, SynthFunctions}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
@@ -20,8 +20,8 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *   → verification + robots gate applied to the DELTA (per-row rules)
   *   → merge-on-read plan view → per-host bounded top-k token ranking
   *   → fetch (mapPartitions resolver) → X4 content typing
-  *   → delta-only state commits (frontier/seen/bloom appends + bucket
-  *     replacement; host-cardinality rewrites for politeness/state)
+  *   → delta-only state commits (frontier + results appends; host-
+  *     cardinality rewrites for politeness/state/telemetry)
   *
   * Scale design (10^10-URL frontier):
   *  - The frontier is an append-only DELTA LOG partitioned by
@@ -30,10 +30,12 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
   *    row of a URL is its max-seq version (merge-on-read), and the log
   *    is compacted to one row per URL every `compactEvery` waves, so
   *    read amplification is bounded and amortized.
-  *  - The URL-seen layer is (a) a bucket-keyed Bloom bank TABLE whose
-  *    membership checks and merges run bucket-co-partitioned in
-  *    executors (the driver never holds or broadcasts the bank) and
-  *    (b) a dedicated bucket-partitioned `seen` key table; the exact
+  *  - The URL-seen layer is (a) a bucket-keyed Bloom bank held in
+  *    executor memory across waves (rebuilt from the frontier on
+  *    resume), whose membership checks and merges run bucket-co-
+  *    partitioned in executors (the driver never holds or broadcasts
+  *    the bank) and (b) the frontier log's immutable discovery rows,
+  *    one per admitted URL, as the exact key layer; the exact
   *    confirm join scans only the wave's touched buckets (manifest
   *    file pruning) and joins only the Bloom-positive remainder —
   *    |dups + false positives|, not |batch|, and never a seen shuffle.
@@ -76,9 +78,8 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     * scan reads just their `norm_url` column (parquet column pruning)
     * from the wave's touched buckets. */
   val AllTables: Seq[String] = Seq("sources", "robots", "politeness",
-    "source_state", "frontier", "seen_bloom", "results", "telemetry",
-    "telemetry_http", "wire_patterns", "content_patterns", "datasets",
-    "dataset_sources")
+    "source_state", "frontier", "results", "telemetry", "telemetry_http",
+    "wire_patterns", "content_patterns", "datasets", "dataset_sources")
 
   /** Host-cardinality tables: write a bounded number of files, scaling
     * with host count (not 1, not #shuffle-partitions). */
@@ -93,7 +94,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // (sequential, their fixed per-job latency dominates startup)
     import org.apache.spark.sql.Encoders
     store.writeEmpty(Encoders.product[FrontierRow].schema, "frontier", wave = -1)
-    store.writeEmpty(Encoders.product[BloomRow].schema, "seen_bloom", wave = -1)
     store.writeEmpty(Encoders.product[FetchResult].schema, "results", wave = -1)
     store.writeEmpty(Encoders.product[TelemetryRow].schema, "telemetry", wave = -1)
     store.writeEmpty(Encoders.product[HttpTelemetryRow].schema, "telemetry_http", wave = -1)
@@ -163,6 +163,10 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     store.writeFused(parts, wave = -1)
   }
 
+  /** The world config, broadcast once into the cascade, fetch and
+    * per-source-facts closures. */
+  private lazy val configB = spark.sparkContext.broadcast(cfg)
+
   /** X4 pattern rows, loaded from the content_patterns TABLE once per
     * engine (tiny: pattern-cardinality) and broadcast into the fetch
     * stage — the DB-driven shape of the reference's detector. */
@@ -174,7 +178,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .map(r => (r.getString(1), r.getString(2), r.getString(3)))
       .toSeq)
 
-  /** X5 Bloom bank held across waves as a cached Dataset (executor
+  /** X5 Bloom bank held across waves as a local checkpoint (executor
     * memory; the driver never holds a blob). `None` before the first
     * wave of this engine instance — a resume in a fresh JVM rebuilds
     * the bank lazily from the frontier's committed discovery rows. */
@@ -186,7 +190,6 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     * independent — byte-identical to the incrementally merged bank).
     * Lazy: no action here; the caller's cogroup evaluates it. */
   private def rebuildBankFromFrontier(): Dataset[BloomRow] = {
-    import spark.implicits._
     val cap = bloomCapacityPerBucket
     val fpp = SeenFpp
     store.read(spark, "frontier")
@@ -219,36 +222,64 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
   private var politenessCarry: Option[DataFrame] = None
   private var stateCarry: Option[DataFrame] = None
 
-  private val trace = sys.env.get("GRAFT_TRACE").contains("1")
-  private def timed[T](label: String, wave: Int)(f: => T): T = {
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[trace] wave=$wave $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
+  /** Free the cross-wave carries and forget the carried bucket tags. */
+  private def dropCarries(): Unit = {
+    (bloomBank ++ politenessCarry ++ stateCarry).foreach(freeCheckpoint)
+    bloomBank = None; politenessCarry = None; stateCarry = None
+    nextBucketTags = None
   }
+
+  /** Run `body` with the Spark job description `label`, restoring the
+    * previous description after. Descriptions are thread-local, so a
+    * forked leg sets its own: a pooled thread keeps whatever it
+    * inherited when it was created. */
+  private def labelled[T](label: String)(body: => T): T = {
+    val prev = spark.sparkContext.getLocalProperty(JobDescription)
+    spark.sparkContext.setJobDescription(label)
+    try body finally spark.sparkContext.setLocalProperty(JobDescription, prev)
+  }
+
+  /** `body` labelled `wave <n>: <name>`, `name` one of [[WavePhases]]. */
+  private def phase[T](wave: Int, name: String)(body: => T): T =
+    labelled(s"wave $wave: $name")(body)
 
   // ---------------------------------------------------------------- waves
 
-  def runWave(wave: Int): WaveMetrics = {
-    val nb = cfg.nBuckets
-    val cfgB = spark.sparkContext.broadcast(cfg)
-    // wave-varying values enter the PLAN as a one-row parameter table,
-    // never as literals: literals bake into whole-stage-codegen source,
-    // so per-wave constants would force a Janino recompile of every
-    // stage every wave (a serial, lock-guarded driver+executor cost
-    // measured at ~40% of task runtime); with parameter columns the
-    // generated code is byte-identical across waves and the codegen
-    // cache hits.
-    // n_buckets rides the parameter table too: it was the one remaining
-    // codegen-visible constant that DIFFERS between the (frozen) Bench
-    // warm-up world and the measured world (32 vs 64), so the warm-up
-    // primed the wrong generated code and run 1's first wave re-paid
-    // Janino for every bucket-keyed stage.
-    val params = broadcast(Seq((wave, 2L * wave, cfg.seed + wave, nb.toLong))
+  /** One wave, as a chain of steps: due scan → gate (discovery cascade,
+    * dedup + Bloom screen, exact confirm, verification, robots) → plan
+    * → fetch → persist (every table write, the carry swap) → commit.
+    * Each step runs under its phase label; every cache and checkpoint
+    * the wave makes lives in one [[WaveScope]], freed when the wave
+    * ends or throws. */
+  def runWave(wave: Int): WaveMetrics = WaveScope.using { scope =>
+    val w = new Wave(wave, waveParams(wave))
+    val d = phase(wave, "due")(dueStep(wave, scope))
+    val g = phase(wave, "gate")(gateStep(w, d, scope))
+    val p = phase(wave, "plan")(planStep(w, d, g, scope))
+    val results = phase(wave, "fetch")(fetchStep(wave, p.plannedWide, scope))
+    phase(wave, "persist")(persistStep(w, d, g, p, results, scope))
+    phase(wave, "commit")(commitStep(w))
+  }
+
+  /** Wave-varying values enter the PLAN as a one-row parameter table,
+    * never as literals: literals bake into whole-stage-codegen source,
+    * so per-wave constants would force a Janino recompile of every
+    * stage every wave (a serial, lock-guarded driver+executor cost
+    * measured at ~40% of task runtime); with parameter columns the
+    * generated code is byte-identical across waves and the codegen
+    * cache hits. n_buckets rides the parameter table too: it differs
+    * between the Bench warm-up world and the measured world (32 vs 64),
+    * and as a literal the warm-up would prime the wrong generated code. */
+  private def waveParams(wave: Int): DataFrame =
+    broadcast(Seq((wave, 2L * wave, cfg.seed + wave, cfg.nBuckets.toLong))
       .toDF("cur_wave", "cur_seq", "mix_seed", "n_buckets"))
+
+  /** Due scan: sources ⋈ state under the F11/F12 gates (join-based — no
+    * driver map), with the A5 method order decided from the per-source
+    * effectiveness telemetry carried in source_state; plus the
+    * politeness-available hosts and the wave's two bucket sets. */
+  private def dueStep(wave: Int, scope: WaveScope): DueStep = {
+    val nb = cfg.nBuckets
     val politeness = politenessCarry
       .map(_.as[PolitenessState])
       .getOrElse(store.read(spark, "politeness").as[PolitenessState])
@@ -271,10 +302,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .getOrElse(store.read(spark, "source_state").as[SourceState])
     val robots = store.read(spark, "robots")
 
-    // ---- 1. due sources (F11 + F12 gates, join-based — no driver map);
-    // the A5 method order is decided here from the per-source
-    // effectiveness telemetry carried in source_state
-    val due = sources
+    val due = scope.cache(sources
       .joinWith(state, sources("source_id") === state("source_id"), "inner")
       .filter((t: (Source, SourceState)) =>
         SourceRules.due(t._2, t._1.status, t._1.frequency, wave))
@@ -285,114 +313,58 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           SourceRules.rssSkipped(st, s.frequency, wave),
           SourceRules.effectiveMethods(st),
           st.discovered_sections)
-      }.cache()
+      })
 
     // The wave needs two bucket sets: the due hosts' buckets (seen/
     // bloom scan pruning) and the politeness-available hosts' buckets
     // (plan backlog scan pruning). In steady state BOTH arrive for free
     // on the PREVIOUS wave's fused state write (collect_set observations
     // riding the politeness/source_state legs, evaluated by the same
-    // Scala kernels — `nextBucketTags` below), so no wave-start driver
-    // action runs at all. The pre-stage job remains only as the
-    // fallback for wave 0 / resume / scoped runs (a scoped due scan is
-    // a subset of the observed all-sources one; the tiny gate worlds
-    // don't need the saved job).
+    // Scala kernels — `nextBucketTags`), so no wave-start driver action
+    // runs at all. The pre-stage collect remains only as the fallback
+    // for a resume.
     val waveSec = cfg.waveSeconds
-    val availHosts = politeness
+    val availHosts = scope.cache(politeness
       .filter(st => Politeness.available(st, wave, waveSec))
       .map(st => (st.host, st.tokens_per_wave))
-      .toDF("p_host", "tokens")
-      .cache() // scanned twice: bucket agg + ranking join
-    val bucketTags: Array[(Int, Int)] = nextBucketTags match {
-      case Some(tags) =>
-        nextBucketTags = None
-        tags
-      case None => timed("pre_stage", wave) {
-        due
-          .map(d => (0, gf.hostBucketJvm(d.host_norm, nb)))
-          .toDF("t", "b")
-          .unionByName(availHosts.select(lit(1).as("t"),
-            pmod(xxhash64(col("p_host")), lit(nb.toLong)).cast("int").as("b")))
-          .distinct().as[(Int, Int)].collect()
-      }
-    }
-    val touched: Seq[Int] =
-      bucketTags.collect { case (0, b) => b }.toSeq.sorted
+      .toDF("p_host", "tokens")) // scanned twice: bucket agg + ranking join
+    val bucketTags: Array[(Int, Int)] = nextBucketTags.getOrElse(due
+      .map(d => (0, gf.hostBucketJvm(d.host_norm, nb)))
+      .toDF("t", "b")
+      .unionByName(availHosts.select(lit(1).as("t"),
+        pmod(xxhash64(col("p_host")), lit(nb.toLong)).cast("int").as("b")))
+      .distinct().as[(Int, Int)].collect())
+    nextBucketTags = None
+    def tagged(tag: Int): Seq[Int] = bucketTags.collect { case (`tag`, b) => b }.toSeq.sorted
+    DueStep(politeness, allSources, state, robots, due, availHosts,
+      touched = tagged(0), availBuckets = tagged(1))
+  }
 
-    // ---- 2. discovery: per-source method cascade (S5/S6/S13 + U1 +
-    // A5) ---- methods run in the effectiveness-gated attempt order
-    // carried on DueSource; a healthy RSS yield ≥ max/2 short-circuits
-    // methods not yet attempted (source_processing.py:624-677); the
-    // supplemental section crawl runs for every source with discovered
-    // sections. The cascade itself is the SHARED SourceRules.cascade
-    // kernel (engine flatMap + dueFacts + oracle — one definition).
-    // lineage strings (M5) are NOT built here: the expansion carries
-    // (method_rank, attempt, slot, section) ints and the discovered_by
-    // label is assembled by a codegen concat only for rows that survive
-    // the F-chain + dedup + seen check — deferred formatting keeps ~50
-    // bytes/row out of the hottest shuffle.
-    val raw = due.repartition(spark.sparkContext.defaultParallelism).flatMap { d =>
-      SourceRules.cascade(cfgB.value)(d.host_idx, wave, d.methods,
-        d.rss_skip, d.sections).links.map { l =>
-        RawLink(d.source_id, d.host_norm, l.url, l.methodRank, l.attempt,
-          l.slot, l.section)
-      }
-    }.toDF("source_id", "src_host", "url", "method_rank", "attempt", "slot", "section")
-
-    // F-chain with a single outcome tag; metrics ride the first action
-    // via observe() — no separate counting job (A7)
-    val discObs = org.apache.spark.sql.Observation()
-    val normalized = raw
-      .withColumn("norm_url", gf.normalize_url(col("url")))
-      .withColumn("host", gf.canonical_host(col("url")))
-      .withColumn("pub_day", SynthFunctions.publish_day(col("norm_url"), cfg))
-      .withColumn("outcome",
-        when(!gf.is_valid_url(col("url")), lit("invalid"))
-          .when(col("host") =!= col("src_host"), lit("out_of_scope")) // F7
-          .when(!gf.passes_skip_patterns(col("url")), lit("filtered")) // F4
-          .when(col("pub_day") =!= -1 &&
-            col("pub_day") < lit(cfg.nowDay - cfg.recencyDays), lit("expired")) // F8
-          .otherwise(lit("ok")))
-      .observe(discObs,
-        count(when(col("outcome") === "out_of_scope", 1)).as("out_of_scope"),
-        count(when(col("outcome") === "filtered", 1)).as("filtered"),
-        count(when(col("outcome") === "expired", 1)).as("expired"),
-        count(when(col("outcome") === "ok", 1)).as("ok"))
-
-    val candidates = normalized
-      .filter(col("outcome") === "ok")
-      .select(col("norm_url"), col("method_rank"), col("attempt"), col("url"),
-        col("source_id"), col("host"), col("pub_day"), col("slot"), col("section"))
-      .crossJoin(params)
-      .withColumn("host_bucket",
-        pmod(xxhash64(col("host")), col("n_buckets")).cast("int"))
-      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets")
-      .as[CandRow]
-
-    // ---- 3. W2/U1 + J6/X5 in ONE bucket shuffle: norm_url → host →
-    // bucket is functional, so the batch dedup (keep the min
-    // (attempt, url) occurrence — this wave's A5 attempt order) can run
-    // inside the bucket cogroup that also evaluates the Bloom screen.
-    // The Bloom bank stays a bucket-keyed table evaluated executor-side;
-    // the driver never holds it.
-    // X5 bank: held as a cached Dataset across waves (executor memory —
-    // the driver never sees a blob); the STORE persists it on the final
-    // wave only. A per-wave parquet write would buy nothing: the
+  /** Discovery gate: cascade and F-chain, the bucket cogroup that dedups
+    * the batch and screens it against the Bloom bank, the exact seen
+    * confirm, then verification and robots on the delta; returns the
+    * URLs new to the crawl. */
+  private def gateStep(w: Wave, d: DueStep, scope: WaveScope): GateStep = {
+    val candidates = discover(w, d.due)
+    // X5 bank: held as a checkpoint across waves (executor memory — the
+    // driver never sees a blob) and never written to the store: the
     // frontier's committed discovery rows are the authoritative seen
-    // keys, so crash recovery rebuilds the bank from them lazily (Bloom
+    // keys, so a resume rebuilds the bank from them lazily (Bloom
     // bit-arrays are insertion-order-independent, so a rebuilt bank is
-    // byte-identical to the incrementally merged one). Cuts one
-    // bucket-fanout file write + one store read per wave from the
-    // parallelism-resistant tail.
-    val touchedSet = touched.toSet
+    // byte-identical to the incrementally merged one).
+    val touchedSet = d.touched.toSet
     val bankAll = bloomBank.getOrElse(rebuildBankFromFrontier())
-    val blooms = { val ts = touchedSet; bankAll.filter(r => ts.contains(r.bucket)) }
+    val blooms = bankAll.filter(r => touchedSet.contains(r.bucket))
+    // W2/U1 + J6/X5 in ONE bucket shuffle: norm_url → host → bucket is
+    // functional, so the batch dedup (keep the min (attempt, url)
+    // occurrence — this wave's A5 attempt order) runs inside the bucket
+    // cogroup that also evaluates the Bloom screen, executor-side.
     // F7 invariant the bucket pruning DEPENDS on: every candidate's host
     // equals a due source's host, so its bucket is in `touched`. If a
     // scope rule ever admitted a cross-host link, an untouched bucket's
     // Bloom filter would silently be replaced by a fresh empty one —
     // fail fast instead of corrupting the seen layer.
-    val checked: Dataset[(CandRow, Boolean)] = candidates
+    val checked: Dataset[(CandRow, Boolean)] = scope.cache(candidates
       .groupByKey(_.host_bucket)
       .cogroup(blooms.groupByKey(_.bucket)) { (b, cs, bs) =>
         require(touchedSet.contains(b),
@@ -412,7 +384,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           case Some(f) => best.values().iterator().asScala
             .map(c => (c, f.mightContainString(c.norm_url)))
         }
-      }.cache()
+      })
     val maybeSeen = checked.filter(_._2).map(_._1).toDF()
     val definitelyNew = checked.filter(!_._2).map(_._1).toDF()
     // exact confirm: semi-join the (pruned) seen scan against the small
@@ -424,13 +396,89 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // those keys, harmless under a semi-join) — parquet column pruning
     // makes this scan cost what a dedicated key table would, without a
     // second table write per wave.
-    val seenScan = store.readBuckets(spark, "frontier", touched).select("norm_url")
+    val seenScan = store.readBuckets(spark, "frontier", d.touched).select("norm_url")
     val hits = seenScan.join(maybeSeen.select("norm_url"), Seq("norm_url"), "left_semi")
     val confirmedNew = maybeSeen.join(hits, Seq("norm_url"), "left_anti")
     val newLinks = definitelyNew.unionByName(confirmedNew)
+    // localCheckpoint, not cache: both dedupe the computation, but a
+    // cache leaves the FULL cascade lineage in every downstream plan —
+    // each of the wave's ~7 write/agg actions re-runs the analyzer/
+    // optimizer (and janino codegen) over the whole discovery tree
+    // before cache substitution kicks in, a parallelism-resistant
+    // driver-serial cost. The checkpoint leaf truncates it.
+    // EAGER, necessarily: this plan carries the `disc` CollectMetrics
+    // node (it counts rows the cascade DROPS, so it cannot ride any
+    // later action), and Dataset.checkpoint wraps even the lazy case
+    // in withAction — a lazy checkpoint posts a query-success event
+    // whose plan holds the un-run metrics node, and with AQE off (the
+    // scaling harness config) the Observation latches those zeros.
+    // Eager materialization flows the rows first, so the event
+    // carries the real counts. Downstream joins are unaffected: every
+    // stats-sensitive join on this path carries an explicit
+    // broadcast/dim hint (LogicalRDD has no static stats).
+    val gatedDelta = scope.checkpoint(verify(newLinks, d.allSources, d.robots), eager = true)
+    GateStep(gatedDelta, bankAll, blooms, touchedSet)
+  }
 
-    // ---- 4. verification (F5/F6/F9) + robots gate — pure per-row rules
-    // applied to the DELTA only (old rows never re-verified).
+  /** Per-source method cascade (S5/S6/S13 + U1 + A5) → normalize →
+    * F-chain outcome tag, counted by the `disc` observation; returns
+    * the "ok" candidates keyed by host bucket. */
+  private def discover(w: Wave, due: Dataset[DueSource]): Dataset[CandRow] = {
+    val wave = w.n
+    val cfgB = configB
+    // methods run in the effectiveness-gated attempt order carried on
+    // DueSource; a healthy RSS yield ≥ max/2 short-circuits methods not
+    // yet attempted (source_processing.py:624-677); the supplemental
+    // section crawl runs for every source with discovered sections. The
+    // cascade itself is the SHARED SourceRules.cascade kernel (engine
+    // flatMap + dueFacts + oracle — one definition).
+    // lineage strings (M5) are NOT built here: the expansion carries
+    // (method_rank, attempt, slot, section) ints and the discovered_by
+    // label is assembled by a codegen concat only for rows that survive
+    // the F-chain + dedup + seen check — deferred formatting keeps ~50
+    // bytes/row out of the hottest shuffle.
+    val raw = due.repartition(spark.sparkContext.defaultParallelism).flatMap { d =>
+      SourceRules.cascade(cfgB.value)(d.host_idx, wave, d.methods,
+        d.rss_skip, d.sections).links.map { l =>
+        RawLink(d.source_id, d.host_norm, l.url, l.methodRank, l.attempt,
+          l.slot, l.section)
+      }
+    }.toDF("source_id", "src_host", "url", "method_rank", "attempt", "slot", "section")
+
+    // F-chain with a single outcome tag; metrics ride the first action
+    // via observe() — no separate counting job (A7)
+    val normalized = raw
+      .withColumn("norm_url", gf.normalize_url(col("url")))
+      .withColumn("host", gf.canonical_host(col("url")))
+      .withColumn("pub_day", SynthFunctions.publish_day(col("norm_url"), cfg))
+      .withColumn("outcome",
+        when(!gf.is_valid_url(col("url")), lit("invalid"))
+          .when(col("host") =!= col("src_host"), lit("out_of_scope")) // F7
+          .when(!gf.passes_skip_patterns(col("url")), lit("filtered")) // F4
+          .when(col("pub_day") =!= -1 &&
+            col("pub_day") < lit(cfg.nowDay - cfg.recencyDays), lit("expired")) // F8
+          .otherwise(lit("ok")))
+      .observe(w.disc,
+        count(when(col("outcome") === "out_of_scope", 1)).as("out_of_scope"),
+        count(when(col("outcome") === "filtered", 1)).as("filtered"),
+        count(when(col("outcome") === "expired", 1)).as("expired"),
+        count(when(col("outcome") === "ok", 1)).as("ok"))
+
+    normalized
+      .filter(col("outcome") === "ok")
+      .select(col("norm_url"), col("method_rank"), col("attempt"), col("url"),
+        col("source_id"), col("host"), col("pub_day"), col("slot"), col("section"))
+      .crossJoin(w.params)
+      .withColumn("host_bucket",
+        pmod(xxhash64(col("host")), col("n_buckets")).cast("int"))
+      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets")
+      .as[CandRow]
+  }
+
+  /** Verification (F5/F6/F9) + robots gate — pure per-row rules applied
+    * to the DELTA only (old rows are never re-verified). */
+  private def verify(newLinks: DataFrame, allSources: Dataset[Source],
+                     robots: DataFrame): DataFrame = {
     // F9 wire patterns come from the wire_patterns TABLE (DB-driven rows
     // like the reference, url_verification.py:372-393): collapsed to a
     // one-row array and broadcast-crossed in — an any-match HOF, the
@@ -464,7 +512,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .drop("wire_pats", "pre_err", "http_precheck")
     // robots: broadcast join + longest-match over the pre-sorted rule
     // array (RFC 9309; equal-length ties favor allow — sorted at build)
-    val gatedDelta = verified
+    verified
       .join(broadcast(robots.select(col("host").as("r_host"), col("rules"))),
         col("host") === col("r_host"), "left")
       .withColumn("u_path", pathOf(col("norm_url")))
@@ -476,25 +524,13 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         when(col("status") === "article" && !col("allowed"), lit("robots_blocked"))
           .otherwise(col("status")))
       .drop("r_host", "rules", "u_path", "allowed")
-      // localCheckpoint, not cache: both dedupe the computation, but a
-      // cache leaves the FULL cascade lineage in every downstream plan —
-      // each of the wave's ~7 write/agg actions re-runs the analyzer/
-      // optimizer (and janino codegen) over the whole discovery tree
-      // before cache substitution kicks in, a parallelism-resistant
-      // driver-serial cost. The checkpoint leaf truncates it.
-      // EAGER, necessarily: this plan carries discObs's CollectMetrics
-      // node (it counts rows the cascade DROPS, so it cannot ride any
-      // later action), and Dataset.checkpoint wraps even the lazy case
-      // in withAction — a lazy checkpoint posts a query-success event
-      // whose plan holds the un-run metrics node, and with AQE off (the
-      // scaling harness config) the Observation latches those zeros.
-      // Eager materialization flows the rows first, so the event
-      // carries the real counts. Downstream joins are unaffected: every
-      // stats-sensitive join on this path carries an explicit
-      // broadcast/dim hint (LogicalRDD has no static stats).
-      .localCheckpoint(true)
+  }
 
-    val dedupObs = org.apache.spark.sql.Observation()
+  /** Plan: the wave's discovery rows, and the per-host top-k of the
+    * eligible backlog. The update log (small) is folded over the
+    * immutable discovery rows, F10 re-admits 404s after the TTL, and
+    * politeness tokens bound each host. */
+  private def planStep(w: Wave, d: DueStep, g: GateStep, scope: WaveScope): PlanStep = {
     // M5 lineage label, assembled post-dedup (same format as the oracle)
     val waveTag = concat(lit("/w"), col("cur_wave").cast("string"), lit("#"))
     val discoveredBy =
@@ -504,7 +540,7 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
           waveTag, col("slot").cast("string"), lit("]")))
         .otherwise(concat(lit("section_crawl["), col("host"), lit("/"),
           col("section"), waveTag, col("slot").cast("string"), lit("]")))
-    val discovered = gatedDelta.crossJoin(params).select(
+    val discovered = g.gatedDelta.crossJoin(w.params).select(
       col("url"), col("norm_url"), col("host"), col("host_bucket"),
       col("source_id"), col("status"),
       // O6: priority varies by discovering method (Synth.priorityOf)
@@ -515,34 +551,28 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       lit("").as("error_message"),
       col("cur_seq").as("seq"), lit(false).as("is_update"))
 
-    // ---- 5. plan: fold the (small) update log over the immutable
-    // discovery rows, F10 TTL re-admission, politeness tokens, bounded
-    // top-k. The backlog side (discovery rows) is NEVER shuffled for
-    // the merge: a URL's discovery row is immutable, only its latest
-    // update (≤ planned rows per wave, reset by compaction) can
-    // supersede it, and that update set is merged on its own (tiny) and
-    // joined in — broadcast under AQE at working scales, plain join
-    // fallback beyond. not_article/wire/robots_blocked rows are never
-    // updated and never eligible, so they skip the plan path entirely.
-    // The scan is PRUNED to the buckets of politeness-available hosts
-    // (manifest file pruning, like the seen/bloom scans): only hosts
-    // with tokens this wave can be planned, so no other bucket's
-    // backlog is read, and nothing is cached — the only materialized
-    // plan product is the (≤ tokens·hosts)-row planned set below.
-    // (host, tokens) STAYS a DataFrame: the ranking join takes it under
-    // AQE (broadcast at working scales, shuffle join beyond — a
-    // 10^8-host politeness table must never materialize on the driver).
-    // Only the BUCKET set reaches the driver (collected in the fused
-    // pre-stage job above): distinct host_bucket ints, ≤ nBuckets
-    // values regardless of host count.
-    val availBuckets: Seq[Int] =
-      bucketTags.collect { case (1, b) => b }.toSeq.sorted
-    val log = store.readBuckets(spark, "frontier", availBuckets)
+    // The backlog side (discovery rows) is NEVER shuffled for the merge:
+    // a URL's discovery row is immutable, only its latest update (≤
+    // planned rows per wave, reset by compaction) can supersede it, and
+    // that update set is merged on its own (tiny) and joined in —
+    // broadcast under AQE at working scales, plain join fallback beyond.
+    // not_article/wire/robots_blocked rows are never updated and never
+    // eligible, so they skip the plan path entirely. The scan is PRUNED
+    // to the buckets of politeness-available hosts (manifest file
+    // pruning, like the seen/bloom scans): only hosts with tokens this
+    // wave can be planned, so no other bucket's backlog is read, and
+    // nothing is cached — the only materialized plan product is the
+    // (≤ tokens·hosts)-row planned set below. (host, tokens) STAYS a
+    // DataFrame: the ranking join takes it under AQE (broadcast at
+    // working scales, shuffle join beyond — a 10^8-host politeness
+    // table must never materialize on the driver). Only the BUCKET set
+    // reaches the driver: ≤ nBuckets ints regardless of host count.
+    val log = store.readBuckets(spark, "frontier", d.availBuckets)
     val dRows = log
       .filter(!col("is_update") && col("status").isin("article", "404"))
       .unionByName(discovered.filter(col("status") === "article"))
     val eligible = foldLog(dRows, log.filter(col("is_update")))
-      .crossJoin(params)
+      .crossJoin(w.params)
       .filter(col("status") === "article" ||
         (col("status") === "404" &&
           col("cur_wave") - col("processed_wave") >= lit(cfg.deadUrlTtlWaves)))
@@ -550,50 +580,178 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
 
     // planned rows keep ALL frontier columns (+ rank): the fetch maps a
     // narrow projection and the outcome updates join back against this
-    // same small cached set — the backlog is scanned exactly once per
-    // wave and never cached.
+    // same small checkpointed set — the backlog is scanned exactly once
+    // per wave and never cached.
     // lazy localCheckpoint (lineage rationale as gatedDelta; lazy is
-    // safe HERE because this plan carries no observation node — see
-    // dedupObs placement below): the frontier update leg re-reads
-    // plannedWide after the fetch — the checkpoint keeps the rank/merge
-    // subtree out of that plan's analysis
-    val plannedWide = rankPerHost(eligible, availHosts).localCheckpoint(false)
+    // safe HERE because this plan carries no observation node — `dedup`
+    // rides the frontier write instead): the frontier update leg
+    // re-reads plannedWide after the fetch — the checkpoint keeps the
+    // rank/merge subtree out of that plan's analysis
+    val plannedWide = scope.checkpoint(rankPerHost(eligible, d.availHosts), eager = false)
+    PlanStep(discovered, plannedWide)
+  }
+
+  /** Fetch (X2 cascade executor; X4 content typing): the planned URLs
+    * resolved, checkpointed as the lineage leaf of the post-fetch legs. */
+  private def fetchStep(wave: Int, plannedWide: DataFrame,
+                        scope: WaveScope): Dataset[FetchResult] = {
+    val cfgB = configB
     val planned = plannedWide
       .select(col("norm_url"), col("host"), col("host_bucket"),
         col("source_id"), col("rank"))
       // FETCH PARALLELISM: the planned set is tiny in bytes, so AQE
       // coalesces the ranking exchange to ONE partition — and the fetch
-      // map inherits it, serializing every resolve (synth + encode +
-      // decode + hash) into a single >1 s task per wave (r6 event log:
-      // the results-write execution ran 2 stages / 1 task). An explicit
+      // map would inherit it, serializing every resolve (synth + encode
+      // + decode + hash) into a single task per wave. An explicit
       // numPartitions repartition is exempt from AQE coalescing; hash on
       // host_bucket keeps the assignment deterministic (no round-robin
       // sort) and bucket-co-located like every other fetch-side shape.
       .repartition(spark.sparkContext.defaultParallelism, col("host_bucket"))
       .as[Planned]
-
-    // ---- 6. fetch (X2 cascade executor; X4 content typing) ----
     // the X4 detector's pattern TABLE rides into the fetch closure as a
     // broadcast (content-tier classification over the fetched caption —
     // the type comes from the payload, not from any id)
     val cpB = contentPatsB
-    val results = planned.map { p =>
+    scope.checkpoint(planned.map { p =>
       CrawlEngine.resolve(cfgB.value, cpB.value, p.norm_url, p.host, p.host_bucket,
         p.source_id, wave, p.rank)
-    }.localCheckpoint(false) // lineage leaf for the 4 post-fetch legs
-    val resultsObs = org.apache.spark.sql.Observation()
-    val resultsToWrite = results.toDF().observe(resultsObs,
-      count(lit(1)).as("planned"),
-      count(when(col("http_status") === 200, 1)).as("fetched"))
+    }, eager = false)
+  }
 
-    // ---- 7. delta state rewrites + commit ----
-    // frontier update rows: planned rows folded with fetch outcomes
-    // (§1.4 transitions); everything else in the frontier is untouched
-    // and stays by manifest reference.
+  /** Every table write of the wave. The results write runs FIRST and
+    * alone: it materializes the whole discovery→plan→fetch chain (and
+    * its caches), so every observation completes in one action. The
+    * frontier, Bloom and fused state legs then run as concurrent Spark
+    * jobs that read only caches and checkpoints. Once every leg is done
+    * the new politeness/state/bank frames replace the carries, and the
+    * next wave's bucket sets are read off the fused write. */
+  private def persistStep(w: Wave, d: DueStep, g: GateStep, p: PlanStep,
+                          results: Dataset[FetchResult], scope: WaveScope): Unit = {
+    val wave = w.n
+    val frontierDelta = frontierLeg(w, p, results)
+    val politenessNext = politenessLeg(wave, d, results)
+    val perSource = scope.cache(perSourceFacts(wave, d.due, g.gatedDelta))
+    // lazy localCheckpoint: the fused state write below is the action
+    // that materializes it, and the blocks double as next wave's
+    // source_state (stateCarry) — lineage truncated, no extra job
+    val stateNextCk = scope.checkpoint(stateLeg(wave, d, perSource), eager = false)
+    val stateToWrite = stateNextCk.crossJoin(w.params).observe(w.state,
+      count(when(array_contains(col("rss_failure_waves"), col("cur_wave")), 1))
+        .as("rss_failures"),
+      count(when(col("paused_auto"), 1)).as("paused_sources"),
+      collect_set(when(col("__due_b") >= 0, col("__due_b"))).as("due_buckets"))
+      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets", "__due_b")
+    // per-(source, method) telemetry (A5 surface, telemetry.py:1777-1910)
+    val telemetry = perSource.as[PerSource].flatMap { o =>
+      Seq(
+        TelemetryRow(wave, o.source_id, "rss", o.rss_attempted,
+          o.raw_rss, o.new_rss.getOrElse(0L)),
+        TelemetryRow(wave, o.source_id, "homepage", o.homepage_ran,
+          o.raw_homepage, o.new_homepage.getOrElse(0L)),
+        TelemetryRow(wave, o.source_id, "section_crawl", o.raw_section > 0,
+          o.raw_section, o.new_section.getOrElse(0L)))
+    }.toDF().observe(w.telem,
+      sum(when(col("method") === "section_crawl", col("links_yielded"))
+        .otherwise(lit(0L))).as("section_links"))
+
+    // overlap: the source-state rewrite depends only on the gate chain
+    // (already checkpointed) and the due facts — NOT on the fetch — so
+    // its materialization can back-fill idle cores while the rank/fetch/
+    // results action runs, instead of serializing inside the fused state
+    // write. Concurrent materialization with the fused write's own scan
+    // is safe: local-checkpoint block writes are idempotent and
+    // RDDCheckpointData is synchronized; the worst case recomputes a
+    // host-cardinality leg.
+    scope.fork(phase(wave, "warm_state")(
+      stateNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())))
+    phase(wave, "write_results")(store.appendDelta(results.toDF().observe(w.results,
+      count(lit(1)).as("planned"),
+      count(when(col("http_status") === 200, 1)).as("fetched")),
+      "results", wave, lineage = s"wave $wave delta"))
+    scope.fork(phase(wave, "write_frontier")(store.appendDelta(
+      frontierDelta.repartition(writeParts(spark, cfg.nBuckets), col("host_bucket")),
+      "frontier", wave, bucketCol = Some("host_bucket"),
+      lineage = s"wave $wave delta (discovered + outcomes)")))
+    // the bank only serves the NEXT wave's screen: the final wave skips
+    // the merge cogroup
+    val nextBank = Option.when(wave + 1 < cfg.nWaves)(
+      scope.fork(phase(wave, "bloom_merge")(mergeBank(p.discovered, g, scope))))
+    // per-(host, http_status) outcome telemetry (telemetry_orm.py:33-277):
+    // a second projection of the checkpointed results — column pruning
+    // keeps the payload bytes out of this exchange too
+    val httpTelemetry = results.toDF().groupBy(col("host"), col("http_status"))
+      .agg(count(lit(1)).as("n"))
+      .crossJoin(w.params) // wave as a parameter column, not a literal
+      .select(col("cur_wave").as("wave"), col("host"), col("http_status"), col("n"))
+    // lazy localCheckpoint, same deal as stateNextCk: materialized by
+    // the fused write, reused as next wave's politeness (politenessCarry)
+    val politenessNextCk = scope.checkpoint(politenessNext, eager = false)
+    // warm the politeness rewrite concurrently with the frontier/bloom
+    // legs (it needs the fetch results, so it can only start now);
+    // same idempotent-materialization rationale as warm_state above
+    scope.fork(phase(wave, "warm_politeness")(
+      politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())))
+    // the four host-or-less-cardinality state tables commit in ONE
+    // fused Spark job (one tagged union, one parquet pass, per-table
+    // manifest registration) — one job launch per wave instead of four.
+    import graft.store.SnapshotStore.FusedPart
+    scope.fork(phase(wave, "write_state")(store.writeFused(Seq(
+      FusedPart("politeness", politenessNextCk
+        .observe(w.pol, collect_set(when(col("__avail_b") >= 0,
+          col("__avail_b"))).as("avail_buckets"))
+        .drop("__avail_b").coalesce(hostFiles),
+        append = false, lineage = s"wave $wave politeness"),
+      FusedPart("source_state", stateToWrite.coalesce(hostFiles),
+        append = false, lineage = s"wave $wave discovery state"),
+      FusedPart("telemetry", telemetry.coalesce(hostFiles),
+        append = true, lineage = s"wave $wave method telemetry"),
+      FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
+        append = true, lineage = s"wave $wave http outcomes")), wave)))
+    scope.join()
+
+    // every consumer of the old carries has run: free them, and carry
+    // the frames the fused write (and the bank merge) materialized
+    (nextBank.flatMap(_ => bloomBank) ++ politenessCarry ++ stateCarry).foreach(freeCheckpoint)
+    nextBank.foreach(b => bloomBank = Some(scope.release(b.value.get.get)))
+    politenessCarry = Some(scope.release(politenessNextCk).drop("__avail_b"))
+    stateCarry = Some(scope.release(stateNextCk).drop("__due_b"))
+
+    // carry the NEXT wave's bucket sets out of the fused write's
+    // observations (same kernels as the wave-start fallback). For a
+    // SCOPED run the state/politeness legs see every source, so the
+    // observed due-bucket set is a SUPERSET of the scope's true due
+    // buckets — and both consumers of the tags are pure scan PRUNERS
+    // (seen/bloom bucket pruning + the plan-backlog bucket pruning),
+    // for which a superset is correct (it only prunes less): the actual
+    // due scan stays scope-restricted via the seed-registry semi-join.
+    if (wave + 1 < cfg.nWaves) {
+      def ints(v: Any): Seq[Int] = v match {
+        case s: scala.collection.Seq[_] => s.map(x => x.asInstanceOf[Number].intValue).toSeq
+        case other => sys.error(s"unexpected observation value: $other")
+      }
+      nextBucketTags = Some(
+        (ints(w.state.get("due_buckets")).map((0, _)) ++
+          ints(w.pol.get("avail_buckets")).map((1, _))).distinct.toArray)
+    }
+  }
+
+  /** Host/source-DIMENSION frames in the state legs broadcast while the
+    * dim is broadcast-sized (≤ ~1M hosts ≈ tens of MB): each such join
+    * collapses from an exchange+sort pair into a map-side hash probe,
+    * taking the fused state write from ~20 scheduled stages to a
+    * handful. Past that size the hint is skipped and Catalyst plans the
+    * same equi-joins as shuffles. */
+  private def dim(df: DataFrame): DataFrame =
+    if (cfg.nHosts <= 1000000) broadcast(df) else df
+
+  /** Frontier delta: this wave's discovery rows plus update rows that
+    * fold the fetch outcomes into the planned rows (§1.4 transitions);
+    * every other frontier row stays by manifest reference. */
+  private def frontierLeg(w: Wave, p: PlanStep, results: Dataset[FetchResult]): DataFrame = {
     val out = results.toDF().select(col("norm_url").as("r_url"),
       col("status").as("r_status"), col("http_status").as("r_http"),
       col("wave").as("r_wave"))
-    val updates = plannedWide.drop("rank")
+    val updates = p.plannedWide.drop("rank")
       .join(broadcast(out), col("norm_url") === col("r_url"), "inner")
       .withColumn("status",
         when(col("r_status").isin("429", "timeout", "captcha"), col("status")) // stay retryable
@@ -607,33 +765,25 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       .withColumn("seq", col("r_wave").cast("long") * 2L + 1L)
       .withColumn("is_update", lit(true))
       .drop("r_url", "r_status", "r_http", "r_wave")
-    // dedupObs rides ONLY the frontier-write branch (the one action
+    // `dedup` rides ONLY the frontier-write branch (the one action
     // guaranteed to stream every discovered row): attaching it on
     // `discovered` itself would put the metrics node inside
     // plannedWide's lazy checkpoint plan, which posts an empty-metrics
-    // query-success event at definition time (see gatedDelta above)
-    val frontierDelta = discovered
-      .observe(dedupObs,
+    // query-success event at definition time (see gateStep)
+    p.discovered
+      .observe(w.dedup,
         count(lit(1)).as("n"),
         count(when(col("status") === "robots_blocked", 1)).as("robots_blocked"))
       .unionByName(updates.select(FrontierCols.map(col): _*))
+  }
 
-    // Host/source-DIMENSION frames in the state legs broadcast while
-    // the dim is broadcast-sized (≤ ~1M hosts ≈ tens of MB): each such
-    // join collapses from an exchange+sort pair into a map-side hash
-    // probe, taking the fused state write from ~20 scheduled stages to
-    // a handful — at host cardinality the stages are all scheduling
-    // latency, the parallelism-resistant serial tail the north-rule
-    // scaling bar is sensitive to. Past that size the hint is skipped
-    // and Catalyst plans the same equi-joins as shuffles (the 100-TB
-    // path: ten-million-host dims shuffle; AQE picks strategies from
-    // runtime stats on real, skewed corpora).
-    def dim(df: DataFrame): DataFrame =
-      if (cfg.nHosts <= 1000000) broadcast(df) else df
-
-    // politeness: per-host outcome aggregation → pure kernel update,
-    // crawl delay joined from the robots table (no driver map). A
-    // relational groupBy, NOT a typed mapGroups: column pruning keeps
+  /** Politeness: per-host outcome aggregation → pure kernel update, crawl
+    * delay joined from the robots table (no driver map); `__avail_b` is
+    * the host's bucket if it is available next wave, else -1. */
+  private def politenessLeg(wave: Int, d: DueStep, results: Dataset[FetchResult]): DataFrame = {
+    val nb = cfg.nBuckets
+    val waveSec = cfg.waveSeconds
+    // a relational groupBy, NOT a typed mapGroups: column pruning keeps
     // the image payload bytes out of the exchange and the partial
     // aggregation ships one row per (partition, host)
     val outcomes = results.toDF()
@@ -644,9 +794,9 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         count(when(col("status") === "429", 1)).as("rl"),
         count(when(col("status") === "timeout", 1)).as("to"),
         count(when(col("status") === "captcha", 1)).as("cp"))
-    val politenessNext = politeness.toDF()
+    d.politeness.toDF()
       .join(dim(outcomes), col("host") === col("o_host"), "left").drop("o_host")
-      .join(dim(robots.select(col("host").as("d_host"), col("crawl_delay_s"))),
+      .join(dim(d.robots.select(col("host").as("d_host"), col("crawl_delay_s"))),
         col("host") === col("d_host"), "left").drop("d_host")
       .as[PolJoin]
       .map { j =>
@@ -670,13 +820,17 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         (next, availB)
       }
       .select(col("_1.*"), col("_2").as("__avail_b"))
+  }
 
-    // source_state: set-based S11 rewrite — ledger (F13), pause counter
-    // (F12/C8), sections (M4), method telemetry; all per-source facts
-    // join-assembled, transition via the shared pure kernel
+  /** Per-source facts of the wave: the cascade's facts for each due
+    * source joined with its per-method new-URL counts and the section
+    * names inferred from its new URLs (M4). */
+  private def perSourceFacts(wave: Int, due: Dataset[DueSource],
+                             gatedDelta: DataFrame): DataFrame = {
+    val cfgB = configB
     val dueFacts = due.map { d =>
       // facts-only evaluation: no second URL expansion (the links
-      // flatMap above is the only place cascade materializes URLs)
+      // flatMap in discover is the only place cascade materializes URLs)
       val f = SourceRules.cascadeFacts(cfgB.value)(d.host_idx, wave, d.methods,
         d.rss_skip, d.sections)
       DueFacts(d.source_id, f.ranRss, f.rssFailed, f.ranHomepage,
@@ -690,11 +844,17 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       collect_set(nullif(
         regexp_extract(col("norm_url"), "/sections/([a-z]+)$", 1), lit("")))
         .as("sections_found"))
-    val perSource = dueFacts
-      .join(dim(newByMethod), Seq("source_id"), "left")
-      .cache()
-    val stateNext = state.toDF()
-      .join(dim(allSources.toDF().select(col("source_id"), col("frequency"),
+    dueFacts.join(dim(newByMethod), Seq("source_id"), "left")
+  }
+
+  /** source_state: set-based S11 rewrite — ledger (F13), pause counter
+    * (F12/C8), sections (M4), method telemetry; all per-source facts
+    * join-assembled, transition via the shared pure kernel. `__due_b`
+    * is the source's bucket if it is due next wave, else -1. */
+  private def stateLeg(wave: Int, d: DueStep, perSource: DataFrame): DataFrame = {
+    val nb = cfg.nBuckets
+    d.state.toDF()
+      .join(dim(d.allSources.toDF().select(col("source_id"), col("frequency"),
         col("status"))), Seq("source_id"))
       .join(dim(perSource), Seq("source_id"), "left")
       .as[StateJoin]
@@ -727,186 +887,51 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
         (out, dueB)
       }
       .select(col("_1.*"), col("_2").as("__due_b"))
-    // lazy localCheckpoint: the fused state write below is the action
-    // that materializes it, and the blocks double as next wave's
-    // source_state (stateCarry) — lineage truncated, no extra job
-    val stateNextCk = stateNext.localCheckpoint(false)
-    val stateObs = org.apache.spark.sql.Observation()
-    val stateToWrite = stateNextCk.crossJoin(params).observe(stateObs,
-      count(when(array_contains(col("rss_failure_waves"), col("cur_wave")), 1))
-        .as("rss_failures"),
-      count(when(col("paused_auto"), 1)).as("paused_sources"),
-      collect_set(when(col("__due_b") >= 0, col("__due_b"))).as("due_buckets"))
-      .drop("cur_wave", "cur_seq", "mix_seed", "n_buckets", "__due_b")
+  }
 
-    // per-(source, method) telemetry (A5 surface, telemetry.py:1777-1910)
-    val telemObs = org.apache.spark.sql.Observation()
-    val telemetry = perSource.as[PerSource].flatMap { o =>
-      Seq(
-        TelemetryRow(wave, o.source_id, "rss", o.rss_attempted,
-          o.raw_rss, o.new_rss.getOrElse(0L)),
-        TelemetryRow(wave, o.source_id, "homepage", o.homepage_ran,
-          o.raw_homepage, o.new_homepage.getOrElse(0L)),
-        TelemetryRow(wave, o.source_id, "section_crawl", o.raw_section > 0,
-          o.raw_section, o.new_section.getOrElse(0L)))
-    }.toDF().observe(telemObs,
-      sum(when(col("method") === "section_crawl", col("links_yielded"))
-        .otherwise(lit(0L))).as("section_links"))
-
-    // the results write runs FIRST and alone: it materializes the whole
-    // discovery→plan→fetch chain (and its caches), so every observation
-    // completes in one action. The remaining writes only read caches and
-    // run as concurrent Spark jobs.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    // overlap: the source-state rewrite depends only on the gate chain
-    // (already checkpointed) and the due facts — NOT on the fetch — so
-    // its materialization can back-fill idle cores while the rank/fetch/
-    // results action runs, instead of serializing inside the fused state
-    // write (r6 event log: the two lazy state-leg materializations were
-    // ~0.5 + 0.4 s on the fused write's critical path). Concurrent
-    // materialization with the fused write's own scan is safe: local-
-    // checkpoint block writes are idempotent and RDDCheckpointData is
-    // synchronized; the worst case recomputes a host-cardinality leg.
-    val fStateWarm = Future(
-      stateNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
-    timed("write_results", wave) {
-      store.appendDelta(resultsToWrite, "results", wave, lineage = s"wave $wave delta")
-    }
-    // bucketed writes hash the bucket key into ~2×cores partitions, NOT
-    // one partition per bucket: physicalWrite's partitionBy still emits
-    // exactly one file per bucket (a bucket hashes to one task), so the
-    // per-bucket manifest and pruning are unchanged, while task-launch
-    // and scheduling overhead stay proportional to the CLUSTER, not the
-    // bucket count (at 10^4 buckets a per-bucket task would put ~10^4
-    // task launches per write on the driver's critical path).
-    val writeParts = math.min(nb, spark.sparkContext.defaultParallelism * 2)
-    val fFrontier = Future(timed("write_frontier", wave) {
-      store.appendDelta(
-        frontierDelta.repartition(writeParts, col("host_bucket")),
-        "frontier", wave, bucketCol = Some("host_bucket"),
-        lineage = s"wave $wave delta (discovered + outcomes)")
-    })
-    // the bank is a derived structure: nothing ever READS the seen_bloom
-    // table (a resume rebuilds the bank from the frontier's committed
-    // discovery rows, byte-identically — see bankAll above), so there is
-    // no merged bank to maintain after the FINAL wave: skip the merge
-    // cogroup and the store persist entirely. The final-wave merge +
-    // replaceBuckets write was ~1.5 s inside the timed crawl for a table
-    // with zero consumers (r6 trace); the seen_bloom table stays
-    // registered (writeEmpty at init) so commit pins are unchanged.
-    val fBloom = if (wave + 1 == cfg.nWaves) Future.successful(())
-    else Future(timed("bloom_merge", wave) {
-      // bucket-co-partitioned merge in executors; touched buckets fold
-      // this wave's keys, untouched rows carry over from the cached bank
-      val cap = bloomCapacityPerBucket
-      val fpp = SeenFpp
-      val newKeys = discovered.select(col("host_bucket"), col("norm_url"))
-        .as[(Int, String)]
-      val mergedTouched = newKeys.groupByKey(_._1)
-        .cogroup(blooms.groupByKey(_.bucket)) { (b, ks, olds) =>
-          val oldRow = olds.nextOption()
-          val bf = oldRow match {
-            case Some(r) => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom))
-            case None => BloomFilter.create(cap, fpp)
-          }
-          var n = 0
-          ks.foreach { k => bf.putString(k._2); n += 1 }
-          if (n == 0) oldRow.iterator // no new keys — bloom unchanged
-          else {
-            val bos = new ByteArrayOutputStream()
-            bf.writeTo(bos)
-            Iterator.single(BloomRow(b, bos.toByteArray))
-          }
+  /** Next wave's Bloom bank: a bucket-co-partitioned merge in executors;
+    * touched buckets fold this wave's keys, untouched rows carry over
+    * from the current bank. */
+  private def mergeBank(discovered: DataFrame, g: GateStep, scope: WaveScope): Dataset[BloomRow] = {
+    val cap = bloomCapacityPerBucket
+    val fpp = SeenFpp
+    val newKeys = discovered.select(col("host_bucket"), col("norm_url"))
+      .as[(Int, String)]
+    val mergedTouched = newKeys.groupByKey(_._1)
+      .cogroup(g.blooms.groupByKey(_.bucket)) { (b, ks, olds) =>
+        val oldRow = olds.nextOption()
+        val bf = oldRow match {
+          case Some(r) => BloomFilter.readFrom(new ByteArrayInputStream(r.bloom))
+          case None => BloomFilter.create(cap, fpp)
         }
-      val ts = touchedSet
-      // localCheckpoint (eager): materializes the bank in executor
-      // storage AND truncates lineage — the bank feeds itself every
-      // wave (cogroup + union), so an ordinary persist would double the
-      // logical plan per wave (analysis/explain blow up exponentially)
-      val nextBank = mergedTouched
-        .union(bankAll.filter(r => !ts.contains(r.bucket)))
-        .localCheckpoint(true)
-      bloomBank.foreach(CrawlEngine.freeCheckpoint) // eager ckpt above already copied the blocks
-      bloomBank = Some(nextBank)
-    })
-    // per-(host, http_status) outcome telemetry (telemetry_orm.py:33-277):
-    // a second projection of the already-cached results — column
-    // pruning keeps the payload bytes out of this exchange too
-    val httpTelemetry = results.toDF().groupBy(col("host"), col("http_status"))
-      .agg(count(lit(1)).as("n"))
-      .crossJoin(params) // wave as a parameter column, not a literal
-      .select(col("cur_wave").as("wave"), col("host"), col("http_status"), col("n"))
-    // the four host-or-less-cardinality state tables commit in ONE
-    // fused Spark job (one tagged union, one parquet pass, per-table
-    // manifest registration) — per-wave driver cost is one job launch
-    // instead of four, the parallelism-resistant serial tail the
-    // north-rule scaling bar is sensitive to. All four legs read only
-    // this wave's caches (results/perSource/due) plus the tiny
-    // politeness/state snapshots.
-    import graft.store.SnapshotStore.FusedPart
-    // lazy localCheckpoint, same deal as stateNextCk: materialized by
-    // the fused write, reused as next wave's politeness (politenessCarry)
-    val politenessNextCk = politenessNext.localCheckpoint(false)
-    // warm the politeness rewrite concurrently with the frontier/bloom
-    // futures (it needs the fetch results, so it can only start now);
-    // same idempotent-materialization rationale as fStateWarm above
-    val fPolWarm = Future(
-      politenessNextCk.foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))
-    val polObs = org.apache.spark.sql.Observation()
-    val fStateTables = Future(timed("write_state_fused", wave) {
-      store.writeFused(Seq(
-        FusedPart("politeness", politenessNextCk
-          .observe(polObs, collect_set(when(col("__avail_b") >= 0,
-            col("__avail_b"))).as("avail_buckets"))
-          .drop("__avail_b").coalesce(hostFiles),
-          append = false, lineage = s"wave $wave politeness"),
-        FusedPart("source_state", stateToWrite.coalesce(hostFiles),
-          append = false, lineage = s"wave $wave discovery state"),
-        FusedPart("telemetry", telemetry.coalesce(hostFiles),
-          append = true, lineage = s"wave $wave method telemetry"),
-        FusedPart("telemetry_http", httpTelemetry.coalesce(hostFiles),
-          append = true, lineage = s"wave $wave http outcomes")), wave)
-    })
-    Seq(fFrontier, fBloom, fStateTables, fStateWarm, fPolWarm)
-      .foreach(Await.result(_, Duration.Inf))
-
-    // the fused write materialized both checkpoints; swap them in as
-    // next wave's state reads and free the previous wave's blocks
-    // (safe only now: every consumer of the old frames has run)
-    politenessCarry.foreach(CrawlEngine.freeCheckpoint)
-    stateCarry.foreach(CrawlEngine.freeCheckpoint)
-    politenessCarry = Some(politenessNextCk.drop("__avail_b"))
-    stateCarry = Some(stateNextCk.drop("__due_b"))
-
-    // carry the NEXT wave's bucket sets out of the fused write's
-    // observations (same kernels as the wave-start fallback). For a
-    // SCOPED run the state/politeness legs see every source, so the
-    // observed due-bucket set is a SUPERSET of the scope's true due
-    // buckets — and both consumers of the tags are pure scan PRUNERS
-    // (seen/bloom bucket pruning + the plan-backlog bucket pruning),
-    // for which a superset is correct (it only prunes less): the actual
-    // due scan stays scope-restricted via the seed-registry semi-join.
-    // Carrying for scoped runs too removes the per-wave pre_stage
-    // driver action (~0.4-0.5 s/wave in the r6 trace).
-    if (wave + 1 < cfg.nWaves) {
-      def ints(v: Any): Seq[Int] = v match {
-        case s: scala.collection.Seq[_] => s.map(x => x.asInstanceOf[Number].intValue).toSeq
-        case a: Array[_] => a.toSeq.map(x => x.asInstanceOf[Number].intValue)
-        case other => sys.error(s"unexpected observation value: $other")
+        var n = 0
+        ks.foreach { k => bf.putString(k._2); n += 1 }
+        if (n == 0) oldRow.iterator // no new keys — bloom unchanged
+        else {
+          val bos = new ByteArrayOutputStream()
+          bf.writeTo(bos)
+          Iterator.single(BloomRow(b, bos.toByteArray))
+        }
       }
-      nextBucketTags = Some(
-        (ints(stateObs.get("due_buckets")).map((0, _)) ++
-          ints(polObs.get("avail_buckets")).map((1, _))).distinct.toArray)
-    }
+    val ts = g.touched
+    // localCheckpoint (eager): materializes the bank in executor
+    // storage AND truncates lineage — the bank feeds itself every
+    // wave (cogroup + union), so an ordinary persist would double the
+    // logical plan per wave (analysis/explain blow up exponentially)
+    scope.checkpoint(mergedTouched.union(g.bankAll.filter(r => !ts.contains(r.bucket))),
+      eager = true)
+  }
 
-    // all counters come from observations riding the write actions
-    val discMetrics = discObs.get
+  /** Commit: the wave's counters (all from observations riding the
+    * write actions) and the cross-table pins, then the cadence
+    * compaction. */
+  private def commitStep(w: Wave): WaveMetrics = {
+    val wave = w.n
+    val discMetrics = w.disc.get
     val nOk = discMetrics("ok").asInstanceOf[Long]
-    val nDiscovered = dedupObs.get("n").asInstanceOf[Long]
-    val nPlanned = resultsObs.get("planned").asInstanceOf[Long]
-    val nFetched = resultsObs.get("fetched").asInstanceOf[Long]
+    val nDiscovered = w.dedup.get("n").asInstanceOf[Long]
+    val nPlanned = w.results.get("planned").asInstanceOf[Long]
+    val nFetched = w.results.get("fetched").asInstanceOf[Long]
     val metrics = WaveMetrics(wave,
       discovered = nDiscovered,
       duplicates = math.max(0, nOk - nDiscovered),
@@ -916,21 +941,15 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
       planned = nPlanned,
       fetched = nFetched,
       failed = nPlanned - nFetched,
-      robots_blocked = dedupObs.get("robots_blocked").asInstanceOf[Long],
-      rss_failures = stateObs.get("rss_failures").asInstanceOf[Long],
-      section_links = telemObs.get("section_links").asInstanceOf[Long],
-      paused_sources = stateObs.get("paused_sources").asInstanceOf[Long])
-    timed("commit", wave)(store.commitWave(wave,
+      robots_blocked = w.dedup.get("robots_blocked").asInstanceOf[Long],
+      rss_failures = w.state.get("rss_failures").asInstanceOf[Long],
+      section_links = w.telem.get("section_links").asInstanceOf[Long],
+      paused_sources = w.state.get("paused_sources").asInstanceOf[Long])
+    // the commit records every WaveMetrics counter under its field name
+    store.commitWave(wave,
       AllTables.map(t => t -> store.currentSnapshot(t).getOrElse(-1)).toMap,
-      Map(
-        "discovered" -> metrics.discovered, "duplicates" -> metrics.duplicates,
-        "out_of_scope" -> metrics.out_of_scope, "filtered" -> metrics.filtered,
-        "expired" -> metrics.expired, "planned" -> metrics.planned,
-        "fetched" -> metrics.fetched, "failed" -> metrics.failed,
-        "robots_blocked" -> metrics.robots_blocked,
-        "rss_failures" -> metrics.rss_failures,
-        "section_links" -> metrics.section_links,
-        "paused_sources" -> metrics.paused_sources)))
+      metrics.productElementNames.zip(metrics.productIterator)
+        .collect { case (k, v: Long) => k -> v }.toMap)
 
     // amortized maintenance: compact the delta log back to one row per
     // URL so merge-on-read input stays bounded (Iceberg-style MoR
@@ -942,51 +961,35 @@ final class CrawlEngine(spark: SparkSession, cfg: Synth.Config, store: SnapshotS
     // read side never pays a full-log scan per query.
     if (cfg.compactEvery > 0 && (wave + 1) % cfg.compactEvery == 0 &&
       wave + 1 < cfg.nWaves) {
-      timed("compact_frontier", wave) {
-        // compacted rows become snapshot rows (is_update=false): the
-        // plan pre-filter then excludes terminal rows from the merge
-        store.writeBucketed(
-          CrawlEngine.frontierCurrent(spark, store)
-            .withColumn("is_update", lit(false))
-            .repartition(writeParts, col("host_bucket")),
-          "frontier", wave, "host_bucket", lineage = s"compaction after wave $wave")
-      }
+      phase(wave, "compact")(
+        compactFrontier(spark, store, cfg.nBuckets, wave, s"compaction after wave $wave"))
     }
-
-    due.unpersist(); checked.unpersist(); perSource.unpersist()
-    availHosts.unpersist()
-    // checkpointed frames hold RDD blocks, not CacheManager entries —
-    // Dataset.unpersist() would be a no-op on them; free the blocks
-    CrawlEngine.freeCheckpoint(gatedDelta)
-    CrawlEngine.freeCheckpoint(plannedWide)
-    CrawlEngine.freeCheckpoint(results)
     metrics
   }
 
   /** Run (or resume) the crawl to `nWaves`. Crash recovery first rolls
     * every table back to the last committed wave's pins (a crash
-    * mid-wave leaves some tables ahead of the commit), then continues. */
+    * mid-wave leaves some tables ahead of the commit), then continues.
+    * The cross-wave carries live only while this runs: a re-run after
+    * a failure starts from the store, never from an abandoned attempt. */
   def run(): Seq[WaveMetrics] = {
-    // a re-run on the same instance after a rollback must not consume
-    // carries from the abandoned attempt — drop them; wave 1 of the new
-    // run falls back to store.read / the frontier rebuild
-    bloomBank = None; nextBucketTags = None
-    politenessCarry = None; stateCarry = None
-    timed("init", -1)(init())
-    timed("recover", -1)(store.recoverToLastCommit(AllTables))
-    val start = store.lastCommittedWave() + 1
-    // wave 0 on a fresh store needs no pre-stage driver collect: every
-    // active source is due (last_wave = -1) and every host politeness-
-    // available (initial state), so the all-buckets set is a known
-    // SUPERSET of both tag sets — and both consumers are scan pruners,
-    // for which a superset is correct (it only prunes less; the frontier
-    // is empty at wave 0 anyway). Saves a 0.5-1.6 s driver action per
-    // engine run (r6 event log: `collect at CrawlEngine.scala:311`).
-    // A crash-resume (start > 0) keeps the exact fallback collect.
-    if (start == 0)
-      nextBucketTags = Some(
-        (0 until cfg.nBuckets).flatMap(b => Seq((0, b), (1, b))).toArray)
-    (start until cfg.nWaves).map(runWave)
+    dropCarries()
+    try {
+      labelled("run: init")(init())
+      labelled("run: recover")(store.recoverToLastCommit(AllTables))
+      val start = store.lastCommittedWave() + 1
+      // wave 0 on a fresh store needs no pre-stage driver collect: every
+      // active source is due (last_wave = -1) and every host politeness-
+      // available (initial state), so the all-buckets set is a known
+      // SUPERSET of both tag sets — and both consumers are scan pruners,
+      // for which a superset is correct (it only prunes less; the
+      // frontier is empty at wave 0 anyway). A crash-resume (start > 0)
+      // keeps the exact fallback collect.
+      if (start == 0)
+        nextBucketTags = Some(
+          (0 until cfg.nBuckets).flatMap(b => Seq((0, b), (1, b))).toArray)
+      (start until cfg.nWaves).map(runWave)
+    } finally dropCarries()
   }
 
   // ------------------------------------------------------------- helpers
@@ -1008,6 +1011,45 @@ object CrawlEngine {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
       case _ => ()
     }
+
+  /** Spark's job-description local property. */
+  private val JobDescription = "spark.job.description"
+
+  /** Phase labels of a wave's jobs (`wave <n>: <phase>`): the six wave
+    * steps, the persist step's legs and the cadence compaction. */
+  val WavePhases: Seq[String] = Seq("due", "gate", "plan", "fetch", "persist",
+    "warm_state", "write_results", "write_frontier", "bloom_merge",
+    "warm_politeness", "write_state", "commit", "compact")
+
+  /** Phase labels of the jobs `run()` starts outside a wave (`run: <phase>`). */
+  val RunPhases: Seq[String] = Seq("init", "recover")
+
+  /** What every step of a wave reads: the wave number, its one-row
+    * parameter table and its counters (each Observation rides one
+    * action; the commit step reads them all). */
+  private final class Wave(val n: Int, val params: DataFrame) {
+    val disc, dedup, results, state, telem, pol: Observation = Observation()
+  }
+
+  /** Due step output: the wave's input tables, the due sources and the
+    * politeness-available hosts (both cached), and the bucket sets that
+    * prune the seen scan (`touched`) and the plan scan. */
+  private final case class DueStep(politeness: Dataset[PolitenessState],
+                                   allSources: Dataset[Source], state: Dataset[SourceState],
+                                   robots: DataFrame, due: Dataset[DueSource],
+                                   availHosts: DataFrame, touched: Seq[Int],
+                                   availBuckets: Seq[Int])
+
+  /** Gate step output: the checkpointed delta of new URLs, and the Bloom
+    * bank (whole and restricted to the touched buckets) it was screened
+    * against. */
+  private final case class GateStep(gatedDelta: DataFrame, bankAll: Dataset[BloomRow],
+                                    blooms: Dataset[BloomRow], touched: Set[Int])
+
+  /** Plan step output: the wave's discovery rows and the checkpointed
+    * planned rows (all frontier columns + rank). */
+  private final case class PlanStep(discovered: DataFrame, plannedWide: DataFrame)
+
 
   /** Robots rule row: rules pre-sorted (longest prefix first, allow
     * winning equal-length ties) so longest-match = first array hit. */
@@ -1142,13 +1184,26 @@ object CrawlEngine {
     val hasUpdates = store.read(spark, "frontier")
       .filter(col("is_update")).limit(1).count() > 0
     if (!hasUpdates) return // already one row per URL
-    val writeParts = math.min(nBuckets, spark.sparkContext.defaultParallelism * 2)
-    store.writeBucketed(
-      frontierCurrent(spark, store)
-        .repartition(writeParts, col("host_bucket")),
-      "frontier", store.lastCommittedWave(), "host_bucket",
-      lineage = "open-for-read compaction")
+    compactFrontier(spark, store, nBuckets, store.lastCommittedWave(), "open-for-read compaction")
   }
+
+  /** Rewrite the frontier log as one row per URL: compacted rows become
+    * snapshot rows (is_update=false), so the plan pre-filter excludes
+    * terminal rows from the merge. */
+  private def compactFrontier(spark: SparkSession, store: SnapshotStore, nBuckets: Int,
+                              wave: Int, lineage: String): Unit =
+    store.writeBucketed(
+      frontierCurrent(spark, store).repartition(writeParts(spark, nBuckets), col("host_bucket")),
+      "frontier", wave, "host_bucket", lineage)
+
+  /** Bucketed writes hash the bucket key into ~2×cores partitions, NOT
+    * one partition per bucket: physicalWrite's partitionBy still emits
+    * exactly one file per bucket (a bucket hashes to one task), so the
+    * per-bucket manifest and pruning are unchanged, while task-launch
+    * and scheduling overhead stay proportional to the CLUSTER, not the
+    * bucket count. */
+  private def writeParts(spark: SparkSession, nBuckets: Int): Int =
+    math.min(nBuckets, spark.sparkContext.defaultParallelism * 2)
 
   /** The frontier's current state (one row per URL) — queries/tests.
     * The update-log fold, NOT a full-log mergeLog: merge-on-read cost

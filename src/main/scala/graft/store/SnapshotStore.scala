@@ -21,8 +21,7 @@ import scala.util.Using
   * Delta commits: [[appendDelta]] writes only the wave's new rows and
   * the new manifest references the previous snapshot's files for
   * untouched buckets — per-wave I/O is O(delta), not O(table).
-  * [[replaceBuckets]] swaps only touched buckets (bloom bank, per-bucket
-  * compaction). Reads assemble the current file list and read with the
+  * Reads assemble the current file list and read with the
   * pinned schema + `recursiveFileLookup` (partition-dir inference off),
   * so [[readBuckets]] prunes to exactly the requested buckets' files —
   * the assertable analogue of Iceberg partition pruning. Atomic rename
@@ -40,20 +39,6 @@ object SnapshotStore {
 
 final class SnapshotStore(val root: String) {
   import SnapshotStore.FusedPart
-
-  // same switch as CrawlEngine's phase tracer: sub-phase attribution of
-  // the fused state write (driver planning vs job execution)
-  private val trace = sys.env.get("GRAFT_TRACE").contains("1")
-  private def timed[T](label: String)(f: => T): T = {
-    if (!trace) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[trace] store $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
-  }
 
   /** bucket → data files (table-relative paths); -1 = unbucketed. */
   type FileMap = Map[Int, Seq[String]]
@@ -143,16 +128,8 @@ final class SnapshotStore(val root: String) {
 
   private def physicalWrite(df: DataFrame, table: String, next: Int,
                             bucketCol: Option[String]): FileMap = {
-    // the first write pins the table schema; every later write must
-    // match it (name + type, nullability-insensitive) — reads apply the
-    // pinned schema, so silent drift would silently drop/null columns
-    if (Files.exists(schemaPath(table))) {
-      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-      val pinned = tableSchema(table)
-      require(shape(df.schema) == shape(pinned),
-        s"schema drift for table '$table': writing ${df.schema.simpleString}, " +
-          s"pinned ${pinned.simpleString}")
-    }
+    // the first write pins the table schema; every later write must match it
+    if (Files.exists(schemaPath(table))) requirePinned(table, df.schema)
     val dir = tableDir(table).resolve(f"snap-$next%05d")
     bucketCol match {
       case Some(c) =>
@@ -169,26 +146,44 @@ final class SnapshotStore(val root: String) {
     listWritten(table, dir)
   }
 
-  private def appendSnap(table: String, wave: Int, lineage: String,
-                         mkFiles: (Int, FileMap) => FileMap,
-                         df: DataFrame, bucketCol: Option[String]): Int = {
+  /** Writes must match the table's pinned schema (name + type,
+    * nullability-insensitive): reads apply the pinned schema, so silent
+    * drift would silently drop/null columns. */
+  private def requirePinned(table: String, schema: StructType): Unit = {
+    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+    val pinned = tableSchema(table)
+    require(shape(schema) == shape(pinned),
+      s"schema drift for table '$table': writing ${schema.simpleString}, " +
+        s"pinned ${pinned.simpleString}")
+  }
+
+  /** Commit the next snapshot of `table` and return its id. `files`
+    * maps that id and the current snapshot's files to the new
+    * snapshot's files. */
+  private def addSnap(table: String, wave: Int, lineage: String)
+                     (files: (Int, FileMap) => FileMap): Int = {
     val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
     val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    val written = physicalWrite(df, table, next, bucketCol)
-    val prior: FileMap =
-      if (m.current < 0) Map.empty else snapOf(table, m.current).files
-    val files = mkFiles(next, prior) match {
-      case f => f ++ written.map { case (b, fs) => b -> (f.getOrElse(b, Seq.empty) ++ fs) }
-    }
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, files)))
+    val prior: FileMap = if (m.current < 0) Map.empty else snapOf(table, m.current).files
+    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, files(next, prior))))
     next
   }
 
+  /** Write `df` as the next snapshot: its own files only, or (`append`)
+    * added to the current snapshot's per-bucket file lists. */
+  private def appendSnap(table: String, wave: Int, lineage: String, append: Boolean,
+                         df: DataFrame, bucketCol: Option[String]): Int =
+    addSnap(table, wave, lineage) { (next, prior) =>
+      val base = if (append) prior else Map.empty[Int, Seq[String]]
+      base ++ physicalWrite(df, table, next, bucketCol).map { case (b, fs) =>
+        b -> (base.getOrElse(b, Seq.empty) ++ fs)
+      }
+    }
+
   /** Full snapshot: the new manifest references only this write's files
     * (whole-table rewrite — host-cardinality state tables, compaction). */
-  def write(df: DataFrame, table: String, wave: Int, rows: Long = -1L,
-            lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, _) => Map.empty, df, None)
+  def write(df: DataFrame, table: String, wave: Int, lineage: String = ""): Int =
+    appendSnap(table, wave, lineage, append = false, df, None)
 
   /** Register an EMPTY initial snapshot without launching a Spark job:
     * pins the schema and commits a file-less manifest. Initializing the
@@ -199,22 +194,19 @@ final class SnapshotStore(val root: String) {
                  lineage: String = ""): Int = {
     if (!Files.exists(schemaPath(table)))
       atomicWrite(schemaPath(table), schema.json)
-    val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
-    val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, Map.empty)))
-    next
+    addSnap(table, wave, lineage)((_, _) => Map.empty)
   }
 
   /** Full bucketed snapshot (initial load / log compaction). */
   def writeBucketed(df: DataFrame, table: String, wave: Int,
                     bucketCol: String, lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, _) => Map.empty, df, Some(bucketCol))
+    appendSnap(table, wave, lineage, append = false, df, Some(bucketCol))
 
   /** Delta commit: append this write's files to the previous snapshot's
     * per-bucket lists; untouched buckets are carried by reference. */
   def appendDelta(df: DataFrame, table: String, wave: Int,
                   bucketCol: Option[String] = None, lineage: String = ""): Int =
-    appendSnap(table, wave, lineage, (_, prior) => prior, df, bucketCol)
+    appendSnap(table, wave, lineage, append = true, df, bucketCol)
 
   /** Write several SMALL (host-or-less cardinality) tables' wave output
     * in ONE Spark job: each part's rows are wrapped in a per-table
@@ -231,14 +223,11 @@ final class SnapshotStore(val root: String) {
   def writeFused(parts: Seq[FusedPart], wave: Int): Unit = {
     import org.apache.spark.sql.functions.{col, lit, struct}
     require(parts.nonEmpty, "writeFused needs at least one part")
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    timed("fused_analyze_legs")(parts.foreach { p =>
+    parts.foreach { p =>
       require(Files.exists(schemaPath(p.table)),
         s"fused write requires a pinned schema for '${p.table}' (init first)")
-      require(shape(p.df.schema) == shape(tableSchema(p.table)),
-        s"schema drift for table '${p.table}': writing ${p.df.schema.simpleString}, " +
-          s"pinned ${tableSchema(p.table).simpleString}")
-    })
+      requirePinned(p.table, p.df.schema)
+    }
     val branches = parts.map { p =>
       val cols = parts.map { q =>
         if (q.table == p.table) struct(p.df.columns.map(col): _*).as(s"__c_${q.table}")
@@ -247,7 +236,6 @@ final class SnapshotStore(val root: String) {
       p.df.select(lit(p.table).as("__tbl") +: cols: _*)
     }
     val fused = branches.reduce(_ unionByName _)
-    timed("fused_plan")(fused.queryExecution.executedPlan)
     val fusedRoot = Paths.get(root, "_fused")
     Files.createDirectories(fusedRoot)
     val next = Using.resource(Files.list(fusedRoot)) { s =>
@@ -256,8 +244,7 @@ final class SnapshotStore(val root: String) {
         .foldLeft(-1)(math.max) + 1
     }
     val dir = fusedRoot.resolve(f"snap-$next%05d")
-    timed("fused_write_job")(
-      fused.write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString))
+    fused.write.mode(SaveMode.Overwrite).partitionBy("__tbl").parquet(dir.toString)
     parts.foreach { p =>
       val sub = dir.resolve(s"__tbl=${p.table}")
       val td = tableDir(p.table)
@@ -268,31 +255,11 @@ final class SnapshotStore(val root: String) {
             .filter(_.getFileName.toString.endsWith(".parquet"))
             .map(f => td.relativize(f).toString).toSeq.sorted
         }
-      val m = parseManifest(p.table).getOrElse(Manifest(-1, Seq.empty))
-      val nid = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-      val prior: FileMap =
-        if (!p.append || m.current < 0) Map.empty else snapOf(p.table, m.current).files
-      val files =
-        if (written.isEmpty) prior
-        else prior + (-1 -> (prior.getOrElse(-1, Seq.empty) ++ written))
-      commitManifest(p.table,
-        Manifest(nid, m.snaps :+ Snap(nid, wave, p.lineage, files)))
+      addSnap(p.table, wave, p.lineage) { (_, prior) =>
+        val base = if (p.append) prior else Map.empty[Int, Seq[String]]
+        if (written.isEmpty) base else base + (-1 -> (base.getOrElse(-1, Seq.empty) ++ written))
+      }
     }
-  }
-
-  /** Replace exactly the buckets present in `df`; all other buckets are
-    * carried by reference from the previous snapshot (bloom bank update,
-    * selective compaction). */
-  def replaceBuckets(df: DataFrame, table: String, wave: Int,
-                     bucketCol: String, lineage: String = ""): Int = {
-    val m = parseManifest(table).getOrElse(Manifest(-1, Seq.empty))
-    val next = m.snaps.map(_.id).foldLeft(-1)(math.max) + 1
-    val written = physicalWrite(df, table, next, Some(bucketCol))
-    val prior: FileMap =
-      if (m.current < 0) Map.empty else snapOf(table, m.current).files
-    val files = (prior -- written.keySet) ++ written
-    commitManifest(table, Manifest(next, m.snaps :+ Snap(next, wave, lineage, files)))
-    next
   }
 
   // -------------------------------------------------------------- reads
@@ -364,8 +331,6 @@ final class SnapshotStore(val root: String) {
   /** Log view — with manifest-carried deltas the current snapshot IS the
     * full log for append-only tables; kept for call-site clarity. */
   def readAll(spark: SparkSession, table: String): DataFrame = read(spark, table)
-
-  def exists(table: String): Boolean = currentSnapshot(table).isDefined
 
   // ---- cross-table wave commits (checkpoint/resume) ----
 

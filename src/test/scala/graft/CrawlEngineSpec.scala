@@ -1,5 +1,6 @@
 package graft
 
+import graft.CrawlEngineSpec.{CrashAfter, JobStart}
 import graft.crawl.{CrawlEngine, CrawlOracle}
 import graft.model.{FetchResult, SourceState}
 import graft.ops.ImageKernels
@@ -531,5 +532,124 @@ class CrawlEngineSpec extends AnyFunSuite {
     // log-rows per frontier URL must not grow with total waves run
     assert(rows7.toDouble / urls7 <= rows4.toDouble / urls4 + 0.05,
       s"log amplification grew: $rows4/$urls4 → $rows7/$urls7")
+  }
+
+  /** Runs `body` between two tagged marker jobs and returns, in start
+    * order, the jobs that started between the markers and the closing
+    * marker's own jobs (started after `body` returned). The markers
+    * keep listener events still queued from earlier tests out of the
+    * window, and waiting for the closing marker's event covers the
+    * bus's delivery lag. */
+  def jobsOf(body: => Unit): (Seq[JobStart], Seq[JobStart]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[JobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        seen.add(JobStart(e.jobId, prop("spark.job.description"),
+          prop("spark.job.tags").toSet.flatMap((t: String) => t.split(",").toSet)))
+      }
+    }
+    def marker(tag: String): Unit = {
+      sc.addJobTag(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.removeJobTag(tag)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("jobs-of-start")
+      body
+      marker("jobs-of-end")
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_.tags("jobs-of-end")) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally sc.removeSparkListener(listener)
+    val all = seen.asScala.toSeq
+    val inside = all.dropWhile(!_.tags("jobs-of-start")).drop(1)
+      .takeWhile(!_.tags("jobs-of-end"))
+    (inside, all.filter(_.tags("jobs-of-end")))
+  }
+
+  test("phase labels: every job of a run carries its phase; a later job carries none") {
+    val short = cfg.copy(nWaves = 2)
+    val (inside, after) = jobsOf(new CrawlEngine(spark, short, freshStore()).run())
+    val WaveLabel = """wave (\d+): (\w+)""".r
+    val RunLabel = """run: (\w+)""".r
+    inside.foreach { j =>
+      j.description match {
+        case Some(WaveLabel(n, phase)) =>
+          assert((0 until short.nWaves).contains(n.toInt), s"job ${j.id}: wave $n")
+          assert(CrawlEngine.WavePhases.contains(phase), s"job ${j.id}: phase $phase")
+        case Some(RunLabel(phase)) =>
+          assert(CrawlEngine.RunPhases.contains(phase), s"job ${j.id}: run phase $phase")
+        case other => fail(s"job ${j.id} started inside run() has description $other")
+      }
+    }
+    val waves = inside.flatMap(_.description).collect { case WaveLabel(n, _) => n.toInt }
+    assert(waves.toSet == Set(0, 1), s"labelled waves: ${waves.distinct}")
+    assert(after.nonEmpty)
+    after.foreach(j => assert(j.description.isEmpty, s"job ${j.id} after run(): ${j.description}"))
+  }
+
+  test("re-run after a crash on the same engine: oracle-equal, no cache or checkpoint kept") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val c3 = cfg.copy(nWaves = 3)
+    val store = freshStore()
+    val commit0 = java.nio.file.Paths.get(store.root, "_commits", "wave-00000.json")
+    // cancels every job that starts once wave 0 has committed: wave 1
+    // dies part-way, the way a driver crash would cut it
+    val crash = new CrashAfter(sc, commit0)
+    def persisted = sc.getPersistentRDDs.keySet
+    def cached = org.apache.spark.sql.CacheEntries.count(spark)
+    val (persistedBefore, cachedBefore) = (persisted, cached)
+
+    val engine = new CrawlEngine(spark, c3, store)
+    sc.addSparkListener(crash)
+    val first = try scala.util.Try(engine.run()) finally {
+      crash.armed = false
+      sc.removeSparkListener(crash)
+    }
+    assert(first.isFailure, "the crash listener did not stop the first run")
+    assert(store.lastCommittedWave() == 0)
+    val again = engine.run()
+    assert((persisted -- persistedBefore).isEmpty,
+      s"RDDs left persisted: ${persisted -- persistedBefore}")
+    assert(cached == cachedBefore, "CacheManager entries left behind")
+
+    val o = CrawlOracle.run(c3)
+    assert(again.map(_.wave) == Seq(1, 2))
+    (0 until c3.nWaves).foreach { w =>
+      val txt = Files.readString(
+        java.nio.file.Paths.get(store.root, "_commits", f"wave-$w%05d.json"))
+      o.waveMetrics(w).foreach { case (k, v) =>
+        assert(txt.contains(s""""$k":$v"""), s"wave $w metric $k=$v; got $txt")
+      }
+    }
+    val seenUrls = CrawlEngine.frontierCurrent(spark, store)
+      .select("norm_url").collect().map(_.getString(0)).toSet
+    assert(seenUrls == o.seen)
+    val order = store.readAll(spark, "results").as[FetchResult].collect()
+      .map(r => CrawlOracle.OracleFetch(r.wave, r.host, r.rank, r.norm_url, r.status))
+      .sortBy(f => (f.wave, f.host, f.rank)).toSeq
+    assert(order == o.fetches.sortBy(f => (f.wave, f.host, f.rank)))
+  }
+}
+
+object CrawlEngineSpec {
+  import org.apache.spark.SparkContext
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+  /** A job start as the listener bus delivered it: id, description and
+    * job tags. */
+  final case class JobStart(id: Int, description: Option[String], tags: Set[String])
+
+  /** Cancels every job that starts once `commit` exists, the way a
+    * driver crash would cut the wave after it. */
+  final class CrashAfter(sc: SparkContext, commit: java.nio.file.Path) extends SparkListener {
+    @volatile var armed = true
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (armed && Files.exists(commit)) sc.cancelJob(e.jobId, "simulated crash")
   }
 }

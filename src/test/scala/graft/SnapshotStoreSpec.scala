@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** The Iceberg-style manifest layer: delta appends reference prior
-  * files, bucket replacement swaps only touched buckets, reads prune by
-  * bucket, time travel pins file lists, rollback recovers crashes. */
+  * files, reads prune by bucket, time travel pins file lists, rollback
+  * recovers crashes. */
 class SnapshotStoreSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -46,17 +46,6 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(pruned.collect().map(_.getString(1)).toSeq == Seq("b"))
     val expected = st.currentFiles("t")(1).toSet
     assert(pruned.inputFiles.map(f => new java.net.URI(f).getPath).toSet == expected)
-  }
-
-  test("replaceBuckets swaps touched buckets, keeps others by reference") {
-    val st = fresh()
-    st.appendDelta(Seq((0, "a"), (1, "b")).toDF("host_bucket", "v"), "t", 0,
-      bucketCol = Some("host_bucket"))
-    val keep = st.currentFiles("t")(1)
-    st.replaceBuckets(Seq((0, "A2")).toDF("host_bucket", "v"), "t", 1, "host_bucket")
-    val got = st.read(spark, "t").collect().map(_.getString(1)).toSet
-    assert(got == Set("A2", "b"))
-    assert(st.currentFiles("t")(1) == keep) // untouched bucket: same files
   }
 
   test("empty table reads back with the pinned schema") {
